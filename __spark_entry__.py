@@ -431,24 +431,19 @@ def q_assemble_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle walks; cycles have no head on either side.
     """
     from reflexiv_spark.operators.counter_packed import count_kmers_packed
-    from reflexiv_spark.operators.extension import rank_paths_packed
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations_packed,
-        prune_forks_packed,
-    )
+    from reflexiv_spark.operators.extension import rank_paths
+    from reflexiv_spark.pipelines.assemble import expand_orientations, prune_forks
 
     k = 15
     # fully-packed route: counting, RC expansion, fork pruning, and every
     # contraction round shuffle 2-bit bigint ids; bases decode exactly
-    # once at final path assembly (identical output to the string path —
-    # tests/test_extension.py::test_fully_packed_pipeline_matches_string_rank)
+    # once at final path assembly (identical output to the string codec —
+    # tests/test_extension.py::test_codecs_agree_on_rank_paths_and_assembly)
     counts = count_kmers_packed(
         _dna(spark, sf_dir), k, min_coverage=2, decode=False
-    ).withColumnRenamed("packed", "kid").localCheckpoint(eager=False)
-    pruned = prune_forks_packed(
-        expand_orientations_packed(counts, k, input_canonical=True), k
-    )
-    anchored = rank_paths_packed(pruned.select("kid", "count"), k)
+    ).localCheckpoint(eager=False)
+    pruned = prune_forks(expand_orientations(counts, k, input_canonical=True), k)
+    anchored = rank_paths(pruned.select("kid", "count"), k)
     return anchored.select(
         "seq",
         F.col("left_cover").cast("bigint").alias("left_cover"),
@@ -468,12 +463,14 @@ def q_assemble_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence the pytest suite pins per-stage, here verified whole).
     min_coverage=1 keeps every 41-mer so the walk reconstructs and
     merges the full corpus streams (~340 contigs at sf0.01)."""
-    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
-    from reflexiv_spark.pipelines.assemble import assemble_from_blocks_counts
+    from reflexiv_spark.operators.counter_packed import count_kmers_packed
+    from reflexiv_spark.pipelines.assemble import assemble_from_counts
 
     k = 41
-    counts = count_kmers_blocks(_dna(spark, sf_dir), k, min_coverage=1, decode=False)
-    out = assemble_from_blocks_counts(counts, k, min_contig=42, input_canonical=True)
+    counts = count_kmers_packed(_dna(spark, sf_dir), k, min_coverage=1, decode=False)
+    out = assemble_from_counts(
+        counts, k, min_contig=42, algorithm="rank", input_canonical=True
+    )
     return out.select(
         "seq",
         F.col("left_cover").cast("bigint").alias("left_cover"),
@@ -1502,7 +1499,7 @@ def q_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension — is replayed exactly by the SQL oracle."""
     from reflexiv_spark.functions.kmer import canonical_kmer
     from reflexiv_spark.operators.counter_packed import count_kmers_packed
-    from reflexiv_spark.pipelines.assemble import assemble_from_packed_counts
+    from reflexiv_spark.pipelines.assemble import assemble_from_counts
     from reflexiv_spark.pipelines.reassemble import reassemble
 
     k = 15
@@ -1530,8 +1527,9 @@ def q_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assembly. min_error_coverage=None matches the old prune_forks
     # default; min_contig=k+1 matches the old length filter.
     pcounts = count_kmers_packed(reads, k, min_coverage=2, decode=False)
-    anchored = assemble_from_packed_counts(
-        pcounts, k, min_contig=k + 1, min_error_coverage=None, input_canonical=True
+    anchored = assemble_from_counts(
+        pcounts, k, min_contig=k + 1, min_error_coverage=None,
+        algorithm="rank", input_canonical=True,
     )
     contigs = (
         anchored.select(canonical_kmer("seq").alias("seq"))
@@ -1581,7 +1579,6 @@ def q_meta_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         # could diverge, not this one (assemble_paths has proven the
         # rank-vs-CTE pairing green since round 4).
         algorithm="rank",
-        packed=True,
     )
     return out.select(F.col("seq").alias("contig_seq"))
 

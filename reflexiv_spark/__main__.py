@@ -70,19 +70,18 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--min-cov", type=int, default=2)
     c.add_argument("--max-cov", type=int, default=10_000_000)
     c.add_argument("--packed", action="store_true",
-                   help="2-bit packed fast path (k <= 31, ~3x faster)")
+                   help="2-bit packed counting fast path (~3x faster)")
 
     r = add("run", help="single-k assembly (reflexiv run)")
     r.add_argument("-k", type=int, default=31)
     r.add_argument("--min-cov", type=int, default=2)
     r.add_argument("--min-contig", type=int, default=500)
-    r.add_argument("--packed", action="store_true",
-                   help="2-bit packed counting fast path (k <= 31)")
     r.add_argument("--algorithm", choices=("contract", "rank"),
                    default="contract",
                    help="contraction kernel: reference-parity randomized"
-                        " contraction, or pointer-doubling rank (with"
-                        " --packed: fully string-free pipeline)")
+                        " contraction over strings, or pointer-doubling"
+                        " rank over 2-bit packed ids (string-free until"
+                        " the final decode)")
 
     d = add("reduce", help="multi-k reduction ladder (reflexiv reduce)")
     d.add_argument("--klist", default="23,31,41,53,67,81,95")
@@ -660,7 +659,7 @@ def main(argv: list[str] | None = None) -> int:
         out = assemble(
             _read_reads(spark, args.input, args.informat), k=args.k,
             min_coverage=args.min_cov, min_contig=args.min_contig,
-            packed=args.packed, algorithm=args.algorithm,
+            algorithm=args.algorithm,
         )
         _write(out, args.output, args.outformat, id_col="contig_id")
     elif args.cmd == "reduce":

@@ -23,18 +23,11 @@ numpy, Arrow-batched, one column per block.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from reflexiv_spark.operators.counter import (
-    DEFAULT_MAX_COVERAGE,
-    DEFAULT_MIN_COVERAGE,
-)
 from reflexiv_spark.operators.counter_packed import _CODE, _M2, _M4, _M8, _M16
-from reflexiv_spark.plans.layout import spread
 
 BASES_PER_BLOCK = 31
 
@@ -243,49 +236,3 @@ def suffix_str_blocks(col: Column | str, k: int, o: int) -> Column:
     """Last ``k - o`` bases decoded to a string — the per-k-mer tail
     appended during final path assembly."""
     return _chunks_to_str(_drop_digits(_chunks_of(col, k), o))
-
-
-def count_kmers_blocks(
-    reads: DataFrame,
-    k: int,
-    seq_col: str = "seq",
-    min_coverage: int = DEFAULT_MIN_COVERAGE,
-    max_coverage: int = DEFAULT_MAX_COVERAGE,
-    decode: bool = True,
-) -> DataFrame:
-    """Canonical k-mer counts for any k via block packing.
-
-    Same semantics as ``count_kmers`` / ``count_kmers_packed``; the
-    Arrow transfer is one int64 column per block (fully columnar), and
-    the count shuffle carries the block array instead of the ASCII
-    k-mer. ``decode=False`` keeps DataFrame[kid: array<long>, count]
-    for the downstream block operators.
-    """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    nb = len(block_lens(k))
-    cols = [f"b{j}" for j in range(nb)]
-
-    def encode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            m = _pack_batch_blocks(pdf["seq"], k)
-            yield pd.DataFrame({c: m[:, j] for j, c in enumerate(cols)})
-
-    src = spread(reads.select(F.col(seq_col).alias("seq")))
-    packed = src.mapInPandas(
-        encode, schema=", ".join(f"{c} long" for c in cols)
-    )
-    counts = (
-        packed.select(F.array(*cols).alias("kid"))
-        .groupBy("kid")
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-    if min_coverage is not None and min_coverage > 1:
-        counts = counts.where(F.col("count") >= min_coverage)
-    if max_coverage is not None:
-        counts = counts.where(F.col("count") <= max_coverage)
-    if not decode:
-        return counts
-    return counts.select(blocks_to_kmer("kid", k).alias("kmer"), "count")

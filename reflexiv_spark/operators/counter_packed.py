@@ -1,4 +1,6 @@
-"""2-bit packed k-mer counting — the optional fast path (k ≤ 31).
+"""2-bit packed k-mer counting — the fast path the ``rank`` assembly
+route counts into (one long per k-mer for k ≤ 31; long blocks above,
+:mod:`reflexiv_spark.operators.counter_blocks`).
 
 The reference packs k-mers into longs inside Java ``mapPartitions``
 closures (2 bits/base, canonical pick = numeric min of forward/RC,
@@ -138,25 +140,50 @@ def count_kmers_packed(
     max_coverage: int = DEFAULT_MAX_COVERAGE,
     decode: bool = True,
 ) -> DataFrame:
-    """Canonical k-mer counts via the packed fast path (k ≤ 31).
+    """Canonical k-mer counts via 2-bit packing, for any k.
 
     Same semantics as :func:`reflexiv_spark.operators.counter.count_kmers`
-    (canonical counting with coverage band); ``decode=False`` keeps the
-    packed ``bigint`` key (the shape downstream packed operators would
-    consume — and what a 100 TB shuffle wants to carry).
+    (canonical counting with coverage band). The key is ``kid``: a
+    ``bigint`` for k ≤ 31, an ``array<long>`` of 31-base blocks above
+    (:mod:`reflexiv_spark.operators.counter_blocks`; the Arrow transfer
+    is then one int64 column per block). ``decode=False`` keeps
+    DataFrame[kid, count] — the input the packed assembly codecs read
+    (:mod:`reflexiv_spark.operators.codec`), and what a 100 TB shuffle
+    wants to carry.
     """
-    if not 1 <= k <= 31:
-        raise ValueError("packed path supports 1 <= k <= 31 (2 bits/base in int64)")
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    if k <= 31:
+        cols, to_kmer = ["kid"], packed_to_kmer
+
+        def pack(seqs):
+            return _pack_batch(seqs, k)[:, None]
+    else:
+        from reflexiv_spark.operators.counter_blocks import (
+            _pack_batch_blocks,
+            block_lens,
+            blocks_to_kmer as to_kmer,
+        )
+
+        cols = [f"b{j}" for j in range(len(block_lens(k)))]
+
+        def pack(seqs):
+            return _pack_batch_blocks(seqs, k)
 
     def encode(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            yield pd.DataFrame({"packed": _pack_batch(pdf["seq"], k)})
+            m = pack(pdf["seq"])
+            yield pd.DataFrame({c: m[:, j] for j, c in enumerate(cols)})
 
     src = spread(reads.select(F.col(seq_col).alias("seq")))
-    packed = src.mapInPandas(encode, schema="packed long")
-    counts = packed.groupBy("packed").agg(F.count(F.lit(1)).alias("count"))
+    packed = src.mapInPandas(
+        encode, schema=", ".join(f"{c} long" for c in cols)
+    )
+    if k > 31:
+        packed = packed.select(F.array(*cols).alias("kid"))
+    counts = packed.groupBy("kid").agg(F.count(F.lit(1)).alias("count"))
     # None bounds mean "no floor/ceiling", matching count_kmers — a literal
     # None comparison would evaluate NULL and silently drop every row.
     if min_coverage is not None and min_coverage > 1:
@@ -165,4 +192,4 @@ def count_kmers_packed(
         counts = counts.where(F.col("count") <= max_coverage)
     if not decode:
         return counts
-    return counts.select(packed_to_kmer("packed", k).alias("kmer"), "count")
+    return counts.select(to_kmer("kid", k).alias("kmer"), "count")

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from reflexiv_spark.functions.kmer import prefix_subkmer, suffix_subkmer
+from reflexiv_spark.operators.codec import LOOP_ROW_BYTES, codec_of
 
 # Reference iteration budget: DefaultParam.java:115.
 DEFAULT_MAX_ITERATIONS = 150
@@ -71,11 +72,6 @@ DEFAULT_MAX_ITERATIONS = 150
 _LOOP_BCAST_BYTES = int(
     os.environ.get("SPARK_GRAFT_LOOP_BCAST_BYTES", str(64 * 1024 * 1024))
 )
-
-# Escape hatch for the hashed loop-id proxy in rank_paths_blocks
-# (SPARK_GRAFT_HASHED_LOOP=0 pins the array-id loop; the injectivity
-# check below makes the two provably output-identical either way).
-_HASHED_LOOP_IDS = os.environ.get("SPARK_GRAFT_HASHED_LOOP", "1") != "0"
 
 
 def _loop_broadcast_ok(n_rows: int | None, row_bytes: int | None) -> bool:
@@ -174,7 +170,6 @@ def rank_paths(
     max_rounds: int = 40,
     overlap: int | None = None,
     checkpoint_every: int = 3,
-    packed: bool | None = None,
 ) -> DataFrame:
     """Pointer-doubling (list-ranking) contraction — the O(rows)-per-round
     alternative to :func:`extend_to_convergence` (VERDICT r3 item 5).
@@ -203,133 +198,51 @@ def rank_paths(
     a single aggregation buffer — same endgame footprint as the
     contraction scheme's final row carrying the whole contig string.
 
-    Shuffle representation: for k ≤ 31 over pure-ACGT fixed-length k-mers
-    (the common case after ``explode_kmers``' drop_invalid), ``packed``
-    (auto-detected when None) swaps the per-round pointer columns from
-    ASCII k-mer strings to 2-bit-packed int64 ids — the reference's own
-    encoding (``ReflexivDataFrameCounter.java:513-525``) applied to the
-    dominant shuffle. Each round then exchanges three longs per row
-    (~24 B payload) instead of two k-byte strings, and strings are decoded
-    exactly once at final assembly via a long-keyed join back to the
-    (kmer, id) table. The packing is ``conv(translate(kmer,'ACGT','0123'),
-    4, 10)`` — injective for fixed-length ACGT, order-isomorphic to the
-    reference's numeric code — and the prefix/suffix join keys become
-    ``id >> 2*(k-o)`` / ``id & (4^o - 1)``: no string ops anywhere in the
-    loop, all whole-stage codegen.
+    Codec: the k-mer format is read from the input column
+    (:mod:`reflexiv_spark.operators.codec`) — ``kmer`` strings, or the
+    2-bit ``kid`` ids of ``count_kmers_packed(decode=False)`` (bigint for
+    k ≤ 31, ``array<long>`` above; the reference's own encodings,
+    ``ReflexivDataFrameCounter.java:513-525``,
+    ``ReflexivDSDynamicKmerRuduction.java:3220-3241``). The prefix/suffix
+    join keys are the codec's (shift/mask for packed ids — no string ops
+    in the loop), and bases decode exactly once per surviving path
+    segment at final assembly.
+
+    Loop ids (r13, guide §2.3 "shuffle keys and metadata instead of
+    payloads"): the rounds only ever test pointer EQUALITY, so they ride
+    a fixed-width long per k-mer — the scalar packed id itself, or
+    xxhash64 of a string or block id — and every round exchanges three
+    longs per row whatever the codec, with the native ids re-attached by
+    ONE join at final assembly. Correctness is gated exactly, not
+    probabilistically: the aggregate that counts the input rows also
+    counts distinct hashed ids, and a collision (2⁻⁶⁴ birthday odds, but
+    checked, not assumed) reruns the same body on the native ids.
     """
+    codec = codec_of(kmer_counts, k)
     o = (k - 1) if overlap is None else overlap
     km = kmer_counts.select(
-        "kmer", F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)
-    # the lazy checkpoint sits BEFORE the packed guard so the guard's scan
-    # materializes it and every later consumer (packed projection, or the
-    # string path's pre/suc/decode-join) reads the barrier, not the
-    # upstream lineage
-    if packed is None:
-        packed = 0 < o < k
-    if packed:
-        # The packed id is injective only for fixed-length pure-ACGT rows;
-        # one short-circuit scan guards the fallback (limit(1) stops at the
-        # first offending row).
-        bad = (
-            km.where((F.length("kmer") != k) | F.col("kmer").rlike("[^ACGT]"))
-            .limit(1)
-            .count()
-        )
-        packed = bad == 0 and 0 < o < k
-    if packed and k <= 31:
-        from reflexiv_spark.operators.counter_packed import kmer_to_packed
-
-        return rank_paths_packed(
-            km.select(kmer_to_packed("kmer", k).alias("kid"), "count"),
-            k,
-            max_rounds=max_rounds,
-            overlap=overlap,
-            checkpoint_every=checkpoint_every,
-        )
-    if packed:  # k > 31: long-block representation
-        from reflexiv_spark.operators.counter_blocks import kmer_to_blocks
-
-        return rank_paths_blocks(
-            km.select(kmer_to_blocks("kmer", k).alias("kid"), "count"),
-            k,
-            max_rounds=max_rounds,
-            overlap=overlap,
-            checkpoint_every=checkpoint_every,
-        )
-
-    # measured-count broadcast gate (see rank_paths_packed); string rows
-    # carry two k-char kmers + a long
-    n_km = km.count()
-    row_bytes = 2 * (k + 24) + 8
-    small = _loop_broadcast_ok(n_km, row_bytes)
-    pre = km.select(
-        F.col("kmer").alias("kid"), prefix_subkmer("kmer", o + 1).alias("__pk")
-    )
-    suc = km.select(
-        F.col("kmer").alias("__pred"), suffix_subkmer("kmer", o + 1).alias("__pk")
-    )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
-    state = _double_pointers(
-        state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
-    )
-    heads_j = F.broadcast(heads) if small else heads
-    done = state.join(heads_j, "anc", "left_semi")
-    km_j = km.select(F.col("kmer").alias("kid"), "kmer", "count")
-    if small:
-        km_j = F.broadcast(km_j)
-    parts = done.join(km_j, "kid").groupBy("anc").agg(
-        F.array_sort(
-            F.collect_list(F.struct("off", "kmer", "count"))
-        ).alias("xs")
-    )
-    rest_bases = F.array_join(
-        F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: x["kmer"].substr(F.lit(o + 1), F.length(x["kmer"])),
-        ),
-        "",
-    )
-    return _assemble_tail(parts, F.col("xs").getItem(0)["kmer"], rest_bases)
-
-
-def rank_paths_packed(
-    packed_counts: DataFrame,
-    k: int,
-    max_rounds: int = 40,
-    overlap: int | None = None,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """:func:`rank_paths` over ALREADY-PACKED 2-bit bigint k-mer ids —
-    DataFrame[kid: bigint, count] as produced by
-    :func:`reflexiv_spark.operators.counter_packed.count_kmers_packed`
-    with ``decode=False``.
-
-    End-to-end string-free: prefix/suffix join keys are shift/mask ops,
-    every pointer round exchanges three longs per row, and bases are
-    decoded exactly once per surviving path segment at final assembly
-    (``conv``+``translate``, JVM-side). This is the 100 TB representation
-    the reference carries through its whole pipeline
-    (``ReflexivDataFrameCounter.java:513-525``).
-    """
-    o = (k - 1) if overlap is None else overlap
-    km = packed_counts.select(
-        "kid", F.col("count").cast("int").alias("count")
+        F.col(codec.col).alias("bid"), F.col("count").cast("int").alias("count")
     ).localCheckpoint(eager=False)  # 3 consumers: pre, suc, final join
-    # ONE materializing count up front: runs the whole upstream pipeline
-    # into the checkpoint and gives the loop its exact row count (state
-    # rows == km rows under the fork-free precondition), so the doubling
-    # loop skips its own count job and the broadcast gate is driven by a
-    # measured size. State rows are 3 longs (~32 B unsafe); 64 B/row
-    # leaves 2x slack for the broadcast hash relation.
-    n_km = km.count()
-    row_bytes = 64
+    # ONE materializing pass runs the whole upstream pipeline into the
+    # checkpoint and gives the loop its exact row count (state rows ==
+    # km rows under the fork-free precondition), so the doubling loop
+    # skips its own count job and the broadcast gate is driven by a
+    # measured size; hashed ids get their injectivity witness in the
+    # same aggregate.
+    lid = codec.loop_id(F.col("bid"))
+    if lid is None:
+        n_km = km.count()
+    else:
+        n_km, n_lid = km.agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct(lid).alias("nl")
+        ).first()
+    hashed = lid is not None and n_lid == n_km
+    if not hashed:  # native ids — after a collision, the same body on them
+        lid = F.col("bid")
+    row_bytes = LOOP_ROW_BYTES if hashed else codec.native_row_bytes
     small = _loop_broadcast_ok(n_km, row_bytes)
-    pre = km.select("kid", F.shiftrightunsigned("kid", 2 * (k - o)).alias("__pk"))
-    suc = km.select(
-        F.col("kid").alias("__pred"),
-        F.col("kid").bitwiseAND(F.lit((1 << (2 * o)) - 1)).alias("__pk"),
-    )
+    pre = km.select(lid.alias("kid"), codec.prefix_key("bid", o).alias("__pk"))
+    suc = km.select(lid.alias("__pred"), codec.suffix_key("bid", o).alias("__pk"))
     state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
     state = _double_pointers(
         state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
@@ -337,132 +250,20 @@ def rank_paths_packed(
     heads_j = F.broadcast(heads) if small else heads
     done = state.join(heads_j, "anc", "left_semi")
     km_j = F.broadcast(km) if small else km
-    parts = done.join(km_j, "kid").groupBy("anc").agg(
+    parts = done.join(km_j, F.col("kid") == lid).groupBy("anc").agg(
         F.array_sort(
-            F.collect_list(F.struct("off", "kid", "count"))
+            F.collect_list(F.struct("off", "bid", "count"))
         ).alias("xs")
     )
-    from reflexiv_spark.operators.counter_packed import packed_to_kmer
-
-    low_mask = F.lit((1 << (2 * (k - o))) - 1)
     rest_bases = F.array_join(
         F.transform(
             F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: packed_to_kmer(x["kid"].bitwiseAND(low_mask), k - o),
+            lambda x: codec.decode_tail(x["bid"], o),
         ),
         "",
     )
     return _assemble_tail(
-        parts, packed_to_kmer(F.col("xs").getItem(0)["kid"], k), rest_bases
-    )
-
-
-def rank_paths_blocks(
-    block_counts: DataFrame,
-    k: int,
-    max_rounds: int = 40,
-    overlap: int | None = None,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """:func:`rank_paths` over long-block packed k-mers (k > 31) —
-    DataFrame[kid: array<long>, count] as produced by
-    :func:`reflexiv_spark.operators.counter_blocks.count_kmers_blocks`
-    with ``decode=False``.
-
-    The multi-long analogue of :func:`rank_paths_packed`: per round the
-    pointer exchange carries 2·⌈k/31⌉ longs + 1 per row (e.g. ~5 longs
-    at k=41 vs two 41-byte ASCII strings), join keys are plan-time
-    shift/mask rechunks, and bases decode exactly once at final
-    assembly. This is the reference's long-k array-of-longs encoding
-    (``ReflexivDSDynamicKmerRuduction.java:3220-3241``) carried through
-    the contraction loop.
-    """
-    from reflexiv_spark.operators.counter_blocks import (
-        blocks_to_kmer,
-        prefix_key_blocks,
-        suffix_key_blocks,
-        suffix_str_blocks,
-    )
-
-    o = (k - 1) if overlap is None else overlap
-    km = block_counts.select(
-        "kid", F.col("count").cast("int").alias("count")
-    ).localCheckpoint(eager=False)  # 3 consumers: pre, suc, final join
-    # Loop-state proxy ids (r13, guide §2.3 "shuffle keys and metadata
-    # instead of payloads"): every doubling round moves TWO array<long>
-    # pointers + an offset per row (~48+16·nb B unsafe at nb blocks),
-    # but the loop only ever tests pointer EQUALITY — the block digits
-    # are not consulted until final assembly. Riding the rounds on
-    # xxhash64(kid) collapses the per-round exchange/broadcast row to
-    # three longs (~4× fewer bytes at k=41, and scalar join hashing
-    # instead of array hashing), with the blocks re-attached by ONE
-    # hashed join at final assembly. Correctness is gated exactly, not
-    # probabilistically: one aggregation checks the hash is injective on
-    # THIS input (distinct hids == distinct kids); any collision — 2⁻⁶⁴
-    # birthday odds, but checked, not assumed — falls back to the
-    # array-id loop, so the result is provably identical either way.
-    kmh = km.select(
-        F.xxhash64("kid").alias("hid"),
-        F.col("kid").alias("bid"),
-        "count",
-    )
-    # ONE materializing pass computes both loop inputs: the exact row
-    # count (rounds bound + broadcast gate) and the injectivity witness
-    # — instead of a count job plus a separate distinct-agg job.
-    n_km, n_hid = kmh.agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("hid").alias("nh")
-    ).first()
-    hashed = _HASHED_LOOP_IDS and n_hid == n_km
-    row_bytes = 64 if hashed else 48 + 16 * ((k + 30) // 31)
-    small = _loop_broadcast_ok(n_km, row_bytes)
-    if hashed:
-        pre = kmh.select(
-            F.col("hid").alias("kid"),
-            prefix_key_blocks("bid", k, o).alias("__pk"),
-        )
-        suc = kmh.select(
-            F.col("hid").alias("__pred"),
-            suffix_key_blocks("bid", k, o).alias("__pk"),
-        )
-    else:
-        pre = km.select("kid", prefix_key_blocks("kid", k, o).alias("__pk"))
-        suc = km.select(
-            F.col("kid").alias("__pred"),
-            suffix_key_blocks("kid", k, o).alias("__pk"),
-        )
-    state, heads = _init_pointers(pre, suc, broadcast_suc=small, eager=False)
-    state = _double_pointers(
-        state, max_rounds, checkpoint_every, n_rows=n_km, row_bytes=row_bytes
-    )
-    heads_j = F.broadcast(heads) if small else heads
-    done = state.join(heads_j, "anc", "left_semi")
-    if hashed:
-        km_j = F.broadcast(kmh) if small else kmh
-        parts = (
-            done.join(km_j, done["kid"] == km_j["hid"])
-            .groupBy("anc")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("off", F.col("bid").alias("kid"), "count"))
-                ).alias("xs")
-            )
-        )
-    else:
-        km_j = F.broadcast(km) if small else km
-        parts = done.join(km_j, "kid").groupBy("anc").agg(
-            F.array_sort(
-                F.collect_list(F.struct("off", "kid", "count"))
-            ).alias("xs")
-        )
-    rest_bases = F.array_join(
-        F.transform(
-            F.slice(F.col("xs"), 2, F.greatest(F.size("xs") - 1, F.lit(0))),
-            lambda x: suffix_str_blocks(x["kid"], k, o),
-        ),
-        "",
-    )
-    return _assemble_tail(
-        parts, blocks_to_kmer(F.col("xs").getItem(0)["kid"], k), rest_bases
+        parts, codec.decode(F.col("xs").getItem(0)["bid"]), rest_bases
     )
 
 

@@ -2,11 +2,13 @@
 (SURVEY.md §3.2, ``ReflexivDSMain.java:188-356``).
 
 Stages:
-1. canonical k-mer counting (counter.count_kmers — A1, F1/F2)
+1. canonical k-mer counting (counter.count_kmers — A1, F1/F2; the
+   ``rank`` route counts 2-bit packed ids, counter_packed)
 2. reverse-complement expansion: each canonical k-mer re-emitted in both
    orientations (``DSKmerReverseComplement``, ``ReflexivDSMain.java:222``)
 3. fork/bubble pruning on forward and reflected sub-k-mers (W1/W2)
-4. randomized contraction to convergence (W3/I1/I2 — operators.extension)
+4. randomized contraction to convergence, or pointer doubling on the
+   ``rank`` route (W3/I1/I2 — operators.extension)
 5. contig canonicalization + min-length filter (F5) + dedup of the
    strand-duplicate contigs (both orientations were assembled)
 
@@ -20,18 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from reflexiv_spark.functions.kmer import (
-    canonical_kmer,
-    prefix_subkmer,
-    reverse_complement,
-    suffix_subkmer,
-)
+from reflexiv_spark.functions.kmer import canonical_kmer
+from reflexiv_spark.operators.codec import codec_for, codec_of
 from reflexiv_spark.operators.counter import (
     DEFAULT_MAX_COVERAGE,
     DEFAULT_MIN_COVERAGE,
-    count_kmers,
 )
-from reflexiv_spark.operators.extension import extend_to_convergence, to_paths
+from reflexiv_spark.operators.extension import (
+    extend_to_convergence,
+    rank_paths,
+    to_paths,
+)
 from reflexiv_spark.operators.fork import filter_forks
 
 # Reference default minimum contig length: DefaultParam.java:108.
@@ -60,110 +61,27 @@ def expand_orientations(
     k: int | None = None,
     input_canonical: bool = False,
 ) -> DataFrame:
-    """Canonical counts → both orientations (step 2).
+    """Canonical counts → both orientations (step 2), in the codec of the
+    input column (:mod:`reflexiv_spark.operators.codec`): a string
+    reverse+translate on ``kmer``, ~12 codegen'd integer ops on a packed
+    ``kid`` (plan-time shift/mask expressions for blocks). ``k`` is
+    required for packed input.
 
     Pass ``k`` and ``input_canonical=True`` when the input is the output
-    of ``count_kmers`` (distinct canonical k-mers): for odd k the
+    of ``count_kmers*`` (distinct canonical k-mers): for odd k the
     palindrome dedup is then provably a no-op and its exchange is
     elided (:func:`_palindrome_free`). Output rows are identical either
     way.
     """
-    fwd = kmer_counts
+    codec = codec_of(kmer_counts, k)
     rc = kmer_counts.select(
-        reverse_complement("kmer").alias("kmer"), F.col("count")
+        codec.revcomp(codec.col).alias(codec.col), F.col("count")
     )
-    both = fwd.unionByName(rc)
+    both = kmer_counts.unionByName(rc)
     if _palindrome_free(k, input_canonical):
         return both
     # A palindromic k-mer equals its RC — dropDuplicates keeps one copy.
-    return both.dropDuplicates(["kmer"])
-
-
-def expand_orientations_packed(
-    packed_counts: DataFrame, k: int, input_canonical: bool = False
-) -> DataFrame:
-    """Step 2 over 2-bit packed bigint ids (DataFrame[kid, count]) — the
-    RC is ~12 codegen'd integer ops instead of a string
-    reverse+translate, and the palindrome dedup shuffles 8-byte longs
-    (elided entirely for odd-k canonical input —
-    :func:`_palindrome_free`)."""
-    from reflexiv_spark.operators.counter_packed import revcomp_packed
-
-    fwd = packed_counts
-    rc = packed_counts.select(
-        revcomp_packed("kid", k).alias("kid"), F.col("count")
-    )
-    both = fwd.unionByName(rc)
-    if _palindrome_free(k, input_canonical):
-        return both
-    return both.dropDuplicates(["kid"])
-
-
-def prune_forks_packed(
-    packed: DataFrame, k: int, min_error_coverage: int | None = None
-) -> DataFrame:
-    """W1+W2 over packed ids: the forward sub-k-mer is ``kid >> 2`` and
-    the reflected one ``kid & (4^(k-1)-1)`` — both window shuffles carry
-    (long, long, int) rows. Tie-breaks on ``kid`` equal the string path's
-    ``kmer`` ties (the 2-bit code is order-isomorphic to A<C<G<T)."""
-    with_keys = packed.withColumn(
-        "fwd_key", F.shiftrightunsigned("kid", 2)
-    ).withColumn(
-        "refl_key", F.col("kid").bitwiseAND(F.lit((1 << (2 * (k - 1))) - 1))
-    )
-    pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    return pruned.drop("fwd_key", "refl_key")
-
-
-def expand_orientations_blocks(
-    block_counts: DataFrame, k: int, input_canonical: bool = False
-) -> DataFrame:
-    """Step 2 over long-block k-mer ids (DataFrame[kid: array<long>,
-    count], k > 31) — the RC is plan-time shift/mask expressions and the
-    palindrome dedup shuffles ⌈k/31⌉ longs per row (elided entirely for
-    odd-k canonical input — :func:`_palindrome_free`)."""
-    from reflexiv_spark.operators.counter_blocks import revcomp_blocks
-
-    fwd = block_counts
-    rc = block_counts.select(
-        revcomp_blocks("kid", k).alias("kid"), F.col("count")
-    )
-    both = fwd.unionByName(rc)
-    if _palindrome_free(k, input_canonical):
-        return both
-    return both.dropDuplicates(["kid"])
-
-
-def prune_forks_blocks(
-    blocks: DataFrame, k: int, min_error_coverage: int | None = None
-) -> DataFrame:
-    """W1+W2 over long-block ids: sub-k-mer keys are rechunked block
-    arrays; tie-breaks on ``kid`` equal the string path's ``kmer`` ties
-    because array order is digit-lexicographic for fixed k."""
-    from reflexiv_spark.operators.counter_blocks import (
-        prefix_key_blocks,
-        suffix_key_blocks,
-    )
-
-    with_keys = blocks.withColumn(
-        "fwd_key", prefix_key_blocks("kid", k, k - 1)
-    ).withColumn("refl_key", suffix_key_blocks("kid", k, k - 1))
-    pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kid",),
-        min_winner_cover=min_error_coverage,
-    )
-    return pruned.drop("fwd_key", "refl_key")
+    return both.dropDuplicates([codec.col])
 
 
 def prune_forks(
@@ -177,16 +95,22 @@ def prune_forks(
     4× min coverage, ``DefaultParam.java:106``): a k-mer that *wins* a fork
     but has coverage below it is discarded as a likely sequencing-error
     branch; unforked k-mers are unaffected.
+
+    Sub-k-mer keys come from the input column's codec; on packed ids both
+    window shuffles carry fixed-width keys, and tie-breaks on ``kid``
+    equal the string path's ``kmer`` ties (the 2-bit code, and block
+    arrays digit by digit, are order-isomorphic to A<C<G<T).
     """
-    with_keys = kmers.withColumn("fwd_key", prefix_subkmer("kmer", k)).withColumn(
-        "refl_key", suffix_subkmer("kmer", k)
-    )
+    codec = codec_of(kmers, k)
+    with_keys = kmers.withColumn(
+        "fwd_key", codec.prefix_key(codec.col, k - 1)
+    ).withColumn("refl_key", codec.suffix_key(codec.col, k - 1))
     pruned = filter_forks(
-        with_keys, "fwd_key", cover_col="count", tie_cols=("kmer",),
+        with_keys, "fwd_key", cover_col="count", tie_cols=(codec.col,),
         min_winner_cover=min_error_coverage,
     )
     pruned = filter_forks(
-        pruned, "refl_key", cover_col="count", tie_cols=("kmer",),
+        pruned, "refl_key", cover_col="count", tie_cols=(codec.col,),
         min_winner_cover=min_error_coverage,
     )
     return pruned.drop("fwd_key", "refl_key")
@@ -203,12 +127,19 @@ def assemble_from_counts(
 ) -> DataFrame:
     """kmer counts → DataFrame[contig_id, seq, left_cover, right_cover].
 
+    The counts are ``kmer`` strings (``count_kmers``) or packed ``kid``
+    ids (``count_kmers_packed(decode=False)``); every stage runs in that
+    codec (:mod:`reflexiv_spark.operators.codec`), so packed ids flow
+    from counting through the contraction loop with one decode at final
+    path assembly.
+
     ``input_canonical=True`` asserts the counts are distinct canonical
-    k-mers (the ``count_kmers`` contract); for odd k the RC expansion
+    k-mers (the ``count_kmers*`` contract); for odd k the RC expansion
     then skips its palindrome-dedup exchange (:func:`_palindrome_free`).
 
     ``algorithm="contract"`` (default) is the reference-parity randomized
-    contraction: pure cycles (circular genomes/plasmids) survive as a
+    contraction over growing strings (packed input is decoded after
+    pruning): pure cycles (circular genomes/plasmids) survive as a
     rotation-dependent representative, like the reference emits.
     ``algorithm="rank"`` is the pointer-doubling kernel
     (:func:`reflexiv_spark.operators.extension.rank_paths`): per-round
@@ -216,18 +147,26 @@ def assemble_from_counts(
     log-rounds — the 100 TB path — but cycles are dropped (anchored-paths
     semantics, identical to the SQL-oracle definition).
     """
+    codec = codec_of(kmer_counts, k)
+    if algorithm == "rank":
+        # lazy barrier: the RC expansion consumes the counts twice (forward
+        # + reflected branch); without it the Arrow-batched packed encode
+        # would rely on exchange reuse to run once
+        kmer_counts = kmer_counts.select(codec.col, "count").localCheckpoint(
+            eager=False
+        )
     expanded = expand_orientations(
         kmer_counts, k, input_canonical=input_canonical
     )
     pruned = prune_forks(expanded, k, min_error_coverage=min_error_coverage)
     if algorithm == "rank":
-        from reflexiv_spark.operators.extension import rank_paths
-
         contracted = rank_paths(
-            pruned.select("kmer", "count"), k, max_rounds=max_iterations
+            pruned.select(codec.col, "count"), k, max_rounds=max_iterations
         )
     elif algorithm == "contract":
-        paths = to_paths(pruned.select("kmer", "count"))
+        paths = to_paths(
+            pruned.select(codec.decode(codec.col).alias("kmer"), "count")
+        )
         contracted = extend_to_convergence(paths, k, max_iterations=max_iterations)
     else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -262,69 +201,6 @@ def _finalize_contigs(contracted: DataFrame, min_contig: int) -> DataFrame:
     )
 
 
-def assemble_from_packed_counts(
-    packed_counts: DataFrame,
-    k: int,
-    min_contig: int = DEFAULT_MIN_CONTIG,
-    max_iterations: int = 150,
-    min_error_coverage: int | None = None,
-    input_canonical: bool = False,
-) -> DataFrame:
-    """The fully-packed rank pipeline: DataFrame[kid: bigint, count] (from
-    ``count_kmers_packed(decode=False)``) → contigs, with every shuffle
-    from counting through the contraction loop carrying 2-bit bigint ids —
-    no k-mer strings anywhere until the one decode at final path assembly.
-    Anchored-path (``algorithm="rank"``) semantics; identical output to
-    the string pipeline (tests/test_extension.py proves equality)."""
-    from reflexiv_spark.operators.extension import rank_paths_packed
-
-    kid_col = "kid" if "kid" in packed_counts.columns else "packed"
-    # lazy barrier: the RC expansion consumes the counts twice (forward +
-    # reflected branch); without it the Arrow-batched encode would rely on
-    # exchange reuse to run once
-    packed_counts = packed_counts.select(
-        F.col(kid_col).alias("kid"), "count"
-    ).localCheckpoint(eager=False)
-    expanded = expand_orientations_packed(
-        packed_counts, k, input_canonical=input_canonical
-    )
-    pruned = prune_forks_packed(expanded, k, min_error_coverage=min_error_coverage)
-    contracted = rank_paths_packed(
-        pruned.select("kid", "count"), k, max_rounds=max_iterations
-    )
-    return _finalize_contigs(contracted, min_contig)
-
-
-def assemble_from_blocks_counts(
-    block_counts: DataFrame,
-    k: int,
-    min_contig: int = DEFAULT_MIN_CONTIG,
-    max_iterations: int = 150,
-    min_error_coverage: int | None = None,
-    input_canonical: bool = False,
-) -> DataFrame:
-    """The fully-packed rank pipeline for k > 31: DataFrame[kid:
-    array<long>, count] (from ``count_kmers_blocks(decode=False)``) →
-    contigs, every shuffle from counting through the contraction loop
-    carrying long-block ids — the k>31 sibling of
-    :func:`assemble_from_packed_counts`."""
-    from reflexiv_spark.operators.extension import rank_paths_blocks
-
-    block_counts = block_counts.select(
-        F.col("kid"), "count"
-    ).localCheckpoint(eager=False)
-    expanded = expand_orientations_blocks(
-        block_counts, k, input_canonical=input_canonical
-    )
-    pruned = prune_forks_blocks(
-        expanded, k, min_error_coverage=min_error_coverage
-    )
-    contracted = rank_paths_blocks(
-        pruned.select("kid", "count"), k, max_rounds=max_iterations
-    )
-    return _finalize_contigs(contracted, min_contig)
-
-
 def assemble(
     reads: DataFrame,
     k: int = 31,
@@ -334,86 +210,27 @@ def assemble(
     seq_col: str = "seq",
     max_iterations: int = 150,
     min_error_coverage: int | None = None,
-    packed: bool = False,
     algorithm: str = "contract",
 ) -> DataFrame:
     """reads[seq] → contigs — the full ``reflexiv run`` equivalent.
 
     ``min_error_coverage`` defaults to 4× ``min_coverage`` like the
     reference (``DefaultParam.java:106``); pass 0/None semantics via an
-    explicit value to disable. ``packed=True`` uses the 2-bit fast-path
-    counter (scalar int64 for k ≤ 31, long-block ``array<long>`` above —
-    identical counts either way); with ``algorithm="rank"`` the packed
-    ids flow straight through expansion, pruning, and the contraction
-    loop with no string decode until final assembly
-    (:func:`assemble_from_packed_counts` /
-    :func:`assemble_from_blocks_counts`).
+    explicit value to disable. ``algorithm="contract"`` counts string
+    k-mers and runs the reference-parity randomized contraction;
+    ``algorithm="rank"`` counts 2-bit packed ids (the codec is chosen
+    from k: int64 up to 31, long blocks above) and keeps them through
+    expansion, pruning and the pointer-doubling loop, with no string
+    decode until final assembly.
     """
     if min_error_coverage is None:
         min_error_coverage = 4 * min_coverage
-    if packed and k > 31:
-        from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
-
-        counts_b = count_kmers_blocks(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-            decode=algorithm != "rank",
-        )
-        if algorithm == "rank":
-            return assemble_from_blocks_counts(
-                counts_b,
-                k,
-                min_contig=min_contig,
-                max_iterations=max_iterations,
-                min_error_coverage=min_error_coverage,
-                input_canonical=True,
-            )
-        return assemble_from_counts(
-            counts_b,
-            k,
-            min_contig=min_contig,
-            max_iterations=max_iterations,
-            min_error_coverage=min_error_coverage,
-            algorithm=algorithm,
-            input_canonical=True,
-        )
-    if packed:
-        from reflexiv_spark.operators.counter_packed import count_kmers_packed
-
-        if algorithm == "rank":
-            return assemble_from_packed_counts(
-                count_kmers_packed(
-                    reads,
-                    k,
-                    seq_col=seq_col,
-                    min_coverage=min_coverage,
-                    max_coverage=max_coverage,
-                    decode=False,
-                ),
-                k,
-                min_contig=min_contig,
-                max_iterations=max_iterations,
-                min_error_coverage=min_error_coverage,
-                input_canonical=True,
-            )
-        counts = count_kmers_packed(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-        )
-    else:
-        counts = count_kmers(
-            reads,
-            k,
-            seq_col=seq_col,
-            min_coverage=min_coverage,
-            max_coverage=max_coverage,
-        )
+    counts = codec_for(algorithm, k).count(
+        reads,
+        seq_col=seq_col,
+        min_coverage=min_coverage,
+        max_coverage=max_coverage,
+    )
     return assemble_from_counts(
         counts,
         k,

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from reflexiv_spark.functions.kmer import explode_kmers
-from reflexiv_spark.operators.counter import count_kmers
+from reflexiv_spark.operators.codec import StringCodec, codec_for
 from reflexiv_spark.operators.dedup import dedup_contigs
 from reflexiv_spark.operators.fixing import fix_junctions
 from reflexiv_spark.pipelines.assemble import assemble_from_counts
@@ -33,88 +32,35 @@ from reflexiv_spark.pipelines.assemble import assemble_from_counts
 DEFAULT_META_KLIST = (23, 31, 41)
 
 
-def _combined_counts_packed(
-    reads: DataFrame,
-    contigs: DataFrame | None,
-    k: int,
-    min_coverage: int,
-    max_coverage: int,
-    seq_col: str,
-) -> DataFrame:
-    """:func:`_combined_counts` in packed space — scalar int64 ids for
-    k ≤ 31, long-block ``array<long>`` ids above (the reference's
-    long-k encoding, ``ReflexivDSDynamicKmerRuduction.java:3220-3241``).
-    The k=41..95 ladder rounds shuffle 2-bit blocks instead of ASCII
-    k-mers (~2 bits/base vs ~4 B/base), and the contig-boost union and
-    coverage floors run on the packed keys directly."""
-    if k <= 31:
-        from reflexiv_spark.operators.counter_packed import (
-            count_kmers_packed as counter,
-        )
-    else:
-        from reflexiv_spark.operators.counter_blocks import (
-            count_kmers_blocks as counter,
-        )
-
-    def norm(df: DataFrame) -> DataFrame:
-        kid = "packed" if "packed" in df.columns else "kid"
-        return df.select(F.col(kid).alias("kid"), "count")
-
-    read_counts = norm(
-        counter(
-            reads, k, seq_col=seq_col, min_coverage=1, max_coverage=None,
-            decode=False,
-        )
-    )
-    if contigs is None:
-        combined = read_counts
-    else:
-        contig_kmers = norm(
-            counter(
-                contigs, k, seq_col="seq", min_coverage=1,
-                max_coverage=None, decode=False,
-            )
-        ).select("kid", F.lit(min_coverage).cast("long").alias("count"))
-        combined = (
-            read_counts.unionByName(contig_kmers)
-            .groupBy("kid")
-            .agg(F.sum("count").alias("count"))
-        )
-    out = combined.where(F.col("count") >= min_coverage)
-    if max_coverage is not None:
-        out = out.where(F.col("count") <= max_coverage)
-    return out
-
-
 def _combined_counts(
     reads: DataFrame,
     contigs: DataFrame | None,
-    k: int,
+    codec: StringCodec,
     min_coverage: int,
     max_coverage: int,
     seq_col: str,
 ) -> DataFrame:
-    """Read k-mer counts, boosted by previous-round contig k-mers.
+    """Read k-mer counts in ``codec``'s format, boosted by previous-round
+    contig k-mers.
 
     Contig k-mers get weight ``min_coverage`` so connectivity already
     proven at the previous k survives this round's coverage floor even
     where raw read coverage is thin (the role the reference's reduction
-    ladder plays for shorter-k k-mers)."""
-    read_counts = count_kmers(
-        reads, k, seq_col=seq_col, min_coverage=1, max_coverage=None
+    ladder plays for shorter-k k-mers). On the packed codecs the
+    k=41..95 rungs shuffle 2-bit blocks instead of ASCII k-mers, and the
+    contig-boost union and coverage floors run on the packed keys."""
+    read_counts = codec.count(
+        reads, seq_col=seq_col, min_coverage=1, max_coverage=None
     )
     if contigs is None:
         combined = read_counts
     else:
-        contig_kmers = explode_kmers(
-            contigs.select(F.col("seq")), k, seq_col="seq"
-        ).select("kmer").dropDuplicates()
-        contig_counts = contig_kmers.select(
-            "kmer", F.lit(min_coverage).cast("long").alias("count")
-        )
+        contig_counts = codec.count(
+            contigs, seq_col="seq", min_coverage=1, max_coverage=None
+        ).select(codec.col, F.lit(min_coverage).cast("long").alias("count"))
         combined = (
             read_counts.unionByName(contig_counts)
-            .groupBy("kmer")
+            .groupBy(codec.col)
             .agg(F.sum("count").alias("count"))
         )
     out = combined.where(F.col("count") >= min_coverage)
@@ -135,7 +81,6 @@ def meta_assemble(
     spark: SparkSession | None = None,
     resume: bool = True,
     algorithm: str = "contract",
-    packed: bool = False,
 ) -> DataFrame:
     """reads[seq] → deduplicated contigs via the multi-k ladder.
 
@@ -143,17 +88,13 @@ def meta_assemble(
     ``workdir/round_k<k>`` (Parquet + ``_SUCCESS``) and completed rounds
     are skipped on re-run — the reference's staged-resume behavior (I4).
     ``algorithm`` picks the contraction kernel per round (``"contract"``
-    reference-parity randomized; ``"rank"`` pointer-doubling — identical
-    contigs on cycle-free graphs, anchored-path semantics otherwise).
-    ``packed=True`` (rank kernel only) carries 2-bit packed ids through
-    every round — scalar int64 for k ≤ 31, long-block ``array<long>``
-    for the k=41..95 rounds — identical contigs, ~2-4× smaller count
-    and contraction shuffles.
+    reference-parity randomized over strings; ``"rank"`` pointer-doubling
+    over 2-bit packed ids — scalar int64 for k ≤ 31, long-block
+    ``array<long>`` for the k=41..95 rounds — identical contigs on
+    cycle-free graphs, anchored-path semantics otherwise).
     """
     if workdir is not None and spark is None:
         spark = reads.sparkSession
-    if packed and algorithm != "rank":
-        raise ValueError('packed=True requires algorithm="rank"')
 
     # Share ONE materialization of the read set across the k-ladder
     # (guide §6/§2.4; VERDICT r13 next-round #2): every rung re-counts
@@ -163,48 +104,20 @@ def meta_assemble(
     # materialized by rung 1's counting job and every later rung reads
     # the pinned blocks. Projected to the one column the ladder
     # consumes before it is pinned (§2.3 — the checkpoint holds seq
-    # bytes only). MEMORY_AND_DISK blocks spill gracefully at scale;
-    # SPARK_GRAFT_META_SHARED_READS=0 restores the re-scan shape for
-    # storage-constrained clusters where re-reading the source is
-    # cheaper than pinning it.
-    import os
-
-    if len(set(klist)) > 1 and os.environ.get(
-        "SPARK_GRAFT_META_SHARED_READS", "1"
-    ) != "0":
+    # bytes only); MEMORY_AND_DISK blocks spill gracefully at scale.
+    if len(set(klist)) > 1:
         reads = reads.select(seq_col).localCheckpoint(eager=False)
 
     contigs: DataFrame | None = None
     for k in sorted(klist):
         def build(k: int = k, prev: DataFrame | None = contigs) -> DataFrame:
             # keep every path ≥ k+1 between rounds; the caller's
-            # min_contig applies only to the final output
-            if packed:
-                from reflexiv_spark.pipelines.assemble import (
-                    assemble_from_blocks_counts,
-                    assemble_from_packed_counts,
-                )
-
-                pcounts = _combined_counts_packed(
-                    reads, prev, k, min_coverage, max_coverage, seq_col
-                )
-                kernel = (
-                    assemble_from_packed_counts
-                    if k <= 31
-                    else assemble_from_blocks_counts
-                )
-                # _combined_counts_packed ends in a canonical-keyed
-                # groupBy, so the odd-k palindrome-dedup elision applies
-                # (OPTIMIZATION_r13 #10)
-                return kernel(
-                    pcounts,
-                    k,
-                    min_contig=k + 1,
-                    min_error_coverage=4 * min_coverage,
-                    input_canonical=True,
-                ).select("contig_id", "seq")
+            # min_contig applies only to the final output. The counts end
+            # in a canonical-keyed groupBy, so the odd-k palindrome-dedup
+            # elision applies (OPTIMIZATION_r13 #10).
             counts = _combined_counts(
-                reads, prev, k, min_coverage, max_coverage, seq_col
+                reads, prev, codec_for(algorithm, k), min_coverage,
+                max_coverage, seq_col,
             )
             return assemble_from_counts(
                 counts,

@@ -1,5 +1,7 @@
 """Long-block (k > 31) packed k-mer kernels: every operator must match
-the oracle-proven string path bit for bit (tie-breaks included)."""
+the oracle-proven string path bit for bit (tie-breaks included; the
+assembly stages over blocks are pinned by the codec differential in
+tests/test_extension.py)."""
 
 from __future__ import annotations
 
@@ -83,9 +85,9 @@ def test_blocks_sub_kmer_keys(spark, k, o):
 
 
 @pytest.mark.parametrize("k", [35, 41, 62, 95])
-def test_count_kmers_blocks_matches_string_counter(spark, k):
+def test_count_kmers_packed_long_k_matches_string_counter(spark, k):
     from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
+    from reflexiv_spark.operators.counter_packed import count_kmers_packed
 
     genome = random_genome(700, seed=k)
     seqs = simulate_reads(genome, read_len=120, coverage=18.0, seed=k)
@@ -98,7 +100,7 @@ def test_count_kmers_blocks_matches_string_counter(spark, k):
     }
     got = {
         (r.kmer, r["count"])
-        for r in count_kmers_blocks(
+        for r in count_kmers_packed(
             reads, k, min_coverage=1, max_coverage=None
         ).collect()
     }
@@ -108,9 +110,9 @@ def test_count_kmers_blocks_matches_string_counter(spark, k):
     }
 
 
-def test_count_kmers_blocks_coverage_band(spark):
+def test_count_kmers_packed_long_k_coverage_band(spark):
     from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
+    from reflexiv_spark.operators.counter_packed import count_kmers_packed
 
     genome = random_genome(500, seed=7)
     seqs = simulate_reads(genome, read_len=90, coverage=20.0, seed=3)
@@ -122,7 +124,7 @@ def test_count_kmers_blocks_coverage_band(spark):
     }
     got = {
         (r.kmer, r["count"])
-        for r in count_kmers_blocks(
+        for r in count_kmers_packed(
             reads, k, min_coverage=2, max_coverage=30
         ).collect()
     }
@@ -150,25 +152,26 @@ def test_blocks_groupby_and_join_on_arrays(spark):
 
 @pytest.mark.parametrize("k", [41, 62])
 def test_blocks_pipeline_matches_string_pipeline(spark, k):
-    """assemble(packed=True) above k=31 — counting, RC expansion, fork
-    pruning, and the pointer-doubling loop all on array<long> — must
-    emit exactly the string pipeline's contigs."""
-    from reflexiv_spark.pipelines.assemble import assemble
+    """The rank route above k=31 — counting, RC expansion, fork pruning,
+    and the pointer-doubling loop all on array<long> — must emit exactly
+    the contigs of the same route run on string k-mers."""
+    from reflexiv_spark.operators.codec import StringCodec
+    from reflexiv_spark.pipelines.assemble import assemble, assemble_from_counts
 
     genome = random_genome(1500, seed=k * 3 + 1)
     seqs = simulate_reads(genome, read_len=150, coverage=25.0, seed=k)
     reads = spark.createDataFrame([(s,) for s in seqs], "seq string")
-    kw = dict(
-        k=k, min_coverage=2, min_contig=k + 1, algorithm="rank",
-        min_error_coverage=8,
-    )
+    kw = dict(min_contig=k + 1, algorithm="rank", min_error_coverage=8)
+    s_counts = StringCodec(k).count(reads, min_coverage=2, max_coverage=None)
     want = {
         (r.contig_id, r.seq, r.left_cover, r.right_cover)
-        for r in assemble(reads, packed=False, **kw).collect()
+        for r in assemble_from_counts(
+            s_counts, k, input_canonical=True, **kw
+        ).collect()
     }
     got = {
         (r.contig_id, r.seq, r.left_cover, r.right_cover)
-        for r in assemble(reads, packed=True, **kw).collect()
+        for r in assemble(reads, k=k, min_coverage=2, **kw).collect()
     }
     assert got == want and want  # identical and non-trivial
     # the assembled contig must actually cover the genome
@@ -177,17 +180,11 @@ def test_blocks_pipeline_matches_string_pipeline(spark, k):
 
 
 def test_prune_forks_blocks_matches_string(spark):
+    """prune_forks on long-block ids keeps exactly the k-mers (and
+    counts) it keeps on strings."""
+    from reflexiv_spark.operators.codec import BlocksCodec
     from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_blocks import (
-        blocks_to_kmer,
-        count_kmers_blocks,
-    )
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations,
-        expand_orientations_blocks,
-        prune_forks,
-        prune_forks_blocks,
-    )
+    from reflexiv_spark.pipelines.assemble import expand_orientations, prune_forks
 
     k = 41
     genome = random_genome(900, seed=5)
@@ -201,38 +198,15 @@ def test_prune_forks_blocks_matches_string(spark):
             expand_orientations(s_counts), k, min_error_coverage=4
         ).collect()
     }
-    b_counts = count_kmers_blocks(
-        reads, k, min_coverage=1, max_coverage=None, decode=False
-    )
+    codec = BlocksCodec(k)
+    b_counts = codec.count(reads, min_coverage=1, max_coverage=None)
     got = {
         (r.kmer, r["count"])
-        for r in prune_forks_blocks(
-            expand_orientations_blocks(b_counts, k), k, min_error_coverage=4
+        for r in prune_forks(
+            expand_orientations(b_counts, k), k, min_error_coverage=4
         )
-        .select(blocks_to_kmer("kid", k).alias("kmer"), "count")
+        .select(codec.decode(codec.col).alias("kmer"), "count")
         .collect()
-    }
-    assert got == want and want
-
-
-def test_meta_ladder_packed_matches_string(spark):
-    """The multi-k ladder with packed=True (int64 ids at k=23, long
-    blocks at k=41) must emit exactly the string ladder's contigs."""
-    from reflexiv_spark.pipelines.meta import meta_assemble
-
-    genome = random_genome(1000, seed=61)
-    seqs = simulate_reads(genome, read_len=150, coverage=15.0, seed=13)
-    reads = spark.createDataFrame([(s,) for s in seqs], "seq string")
-    kw = dict(
-        klist=(23, 41), min_coverage=2, min_contig=100, algorithm="rank"
-    )
-    want = {
-        (r.contig_id, r.seq)
-        for r in meta_assemble(reads, packed=False, **kw).collect()
-    }
-    got = {
-        (r.contig_id, r.seq)
-        for r in meta_assemble(reads, packed=True, **kw).collect()
     }
     assert got == want and want
 
@@ -241,20 +215,9 @@ def test_expand_orientations_input_canonical_skip(spark):
     """Odd-k canonical counts: ``input_canonical=True`` skips the
     palindrome-dedup exchange with identical output (r13 optimization);
     even k keeps the dedup because palindromes are real there."""
+    from reflexiv_spark.operators.codec import codec_for_k
     from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_blocks import (
-        blocks_to_kmer,
-        count_kmers_blocks,
-    )
-    from reflexiv_spark.operators.counter_packed import (
-        count_kmers_packed,
-        packed_to_kmer,
-    )
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations,
-        expand_orientations_blocks,
-        expand_orientations_packed,
-    )
+    from reflexiv_spark.pipelines.assemble import expand_orientations
 
     genome = random_genome(600, seed=11)
     seqs = simulate_reads(genome, read_len=90, coverage=15.0, seed=3)
@@ -284,39 +247,18 @@ def test_expand_orientations_input_canonical_skip(spark):
     slow = expand_orientations(counts)
     assert _final_exchanges(fast) == _final_exchanges(slow) - 1
 
-    # packed variant, odd k <= 31
-    pc = count_kmers_packed(reads, 15, min_coverage=1, max_coverage=None, decode=False)
-    want_p = sorted(
-        (r.kmer, r["count"])
-        for r in expand_orientations_packed(pc.withColumnRenamed("packed", "kid"), 15)
-        .select(packed_to_kmer("kid", 15).alias("kmer"), "count")
-        .collect()
-    )
-    got_p = sorted(
-        (r.kmer, r["count"])
-        for r in expand_orientations_packed(
-            pc.withColumnRenamed("packed", "kid"), 15, input_canonical=True
+    # packed codecs: int64 ids at odd k <= 31, long blocks at odd k > 31
+    for k in (15, 41):
+        codec = codec_for_k(k)
+        pc = codec.count(reads, min_coverage=1, max_coverage=None)
+        decoded = lambda df: sorted(
+            tuple(r) for r in df.select(codec.decode("kid"), "count").collect()
         )
-        .select(packed_to_kmer("kid", 15).alias("kmer"), "count")
-        .collect()
-    )
-    assert got_p == want_p == want
-
-    # blocks variant, odd k > 31
-    bc = count_kmers_blocks(reads, 41, min_coverage=1, max_coverage=None, decode=False)
-    want_b = sorted(
-        (r.kmer, r["count"])
-        for r in expand_orientations_blocks(bc, 41)
-        .select(blocks_to_kmer("kid", 41).alias("kmer"), "count")
-        .collect()
-    )
-    got_b = sorted(
-        (r.kmer, r["count"])
-        for r in expand_orientations_blocks(bc, 41, input_canonical=True)
-        .select(blocks_to_kmer("kid", 41).alias("kmer"), "count")
-        .collect()
-    )
-    assert got_b == want_b and want_b
+        want_p = decoded(expand_orientations(pc, k))
+        got_p = decoded(expand_orientations(pc, k, input_canonical=True))
+        assert got_p == want_p and want_p
+        if k == 15:
+            assert got_p == want
 
     # EVEN k: the canonical set can contain palindromes ("ACGT" is its
     # own RC) — the flag must NOT skip the dedup there

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from tests.conftest import brute_force_kmer_counts, random_genome, simulate_reads
 
 
@@ -47,11 +45,3 @@ def test_packed_skips_invalid_and_boundary_windows(spark):
     from tests.conftest import brute_force_kmer_counts
 
     assert got == brute_force_kmer_counts(["ACGTNACGT", "TTTTT"], 4)
-
-
-def test_packed_rejects_large_k(spark):
-    from reflexiv_spark.operators.counter_packed import count_kmers_packed
-
-    df = spark.createDataFrame([("ACGT",)], "seq string")
-    with pytest.raises(ValueError, match="1 <= k <= 31"):
-        count_kmers_packed(df, 32)

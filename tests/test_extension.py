@@ -1,6 +1,8 @@
 """Extension-loop tests: contraction rounds + end-to-end assembly goldens
 (SURVEY.md §5 items 3; FIXTURES.md §8 "full single-k assembly")."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,39 +107,73 @@ def test_rank_paths_drops_cycles_keeps_paths(spark):
     assert out == [lin]
 
 
-def test_rank_paths_packed_matches_string_path(spark):
-    """The 2-bit packed-long pointer representation (k ≤ 31) and the string
-    fallback produce identical anchored paths, including non-default
-    overlap; mixed-length / non-ACGT inputs auto-fall back and stay
-    correct."""
+def _codec_case(shape, k):
+    """Sequences for the codec differential: reads of which every k-mer
+    is kept (each sequence 1-3 times, so the error-coverage gate bites)."""
+    rng = random.Random(k * 7 + len(shape))
+    g = random_genome(900, seed=k)
+    frags = [g[0:260], g[280:560], g[580:900]]
+    if shape == "linear":
+        return frags, frags
+    if shape == "cycle":
+        # a pure cycle (every cyclic k-mer, no head) beside one linear path
+        cyc = "".join(rng.choice("ACGT") for _ in range(3 * k + 7))
+        return [(cyc + cyc)[: len(cyc) + k - 1], frags[0]], [frags[0]]
+    # even k: x + revcomp(x) is its own reverse complement
+    x = "".join(rng.choice("ACGT") for _ in range(k // 2))
+    pal = frags[0][:120] + x + revcomp(x) + frags[1][:120]
+    return [pal, frags[2]], [frags[2]]
+
+
+@pytest.mark.parametrize(
+    "k,shape",
+    [(k, s) for k in (21, 31, 32, 41, 62) for s in ("linear", "cycle")]
+    + [(32, "palindrome"), (62, "palindrome")],
+)
+def test_codecs_agree_on_rank_paths_and_assembly(spark, k, shape):
+    """The forced string codec and the codec chosen from k (int64 ids up
+    to 31, long blocks above) give identical pruned k-mers, rank_paths
+    rows (default and non-default overlap) and rank-route contigs."""
+    from reflexiv_spark.operators.codec import StringCodec, codec_for_k
     from reflexiv_spark.operators.extension import rank_paths
-
-    g = random_genome(700, seed=31)
-    k = 31
-    frags = [g[0:260], g[280:500], g[520:700]]
-    kmers = sorted({f[i : i + k] for f in frags for i in range(len(f) - k + 1)})
-    df = spark.createDataFrame(
-        [(km, i % 7 + 1) for i, km in enumerate(kmers)], ["kmer", "count"]
+    from reflexiv_spark.pipelines.assemble import (
+        assemble_from_counts,
+        expand_orientations,
+        prune_forks,
     )
-    key = lambda rows: {(r["seq"], r["left_cover"], r["right_cover"]) for r in rows}
-    p = key(rank_paths(df, k, packed=True).collect())
-    s = key(rank_paths(df, k, packed=False).collect())
-    assert p == s and {x for x, _, _ in p} == set(frags)
 
-    # non-default overlap: adjacent rows share o=28 bases
-    po = key(rank_paths(df, k, overlap=28, packed=True).collect())
-    so = key(rank_paths(df, k, overlap=28, packed=False).collect())
-    assert po == so
-
-    # an N-containing k-mer defeats injective packing: auto-detect must
-    # fall back to strings and match the explicit string path (the N^k row
-    # itself is a self-loop — a cycle — and is dropped by both)
-    noisy = df.union(
-        spark.createDataFrame([("N" * k, 1)], ["kmer", "count"])
+    seqs, linear = _codec_case(shape, k)
+    reads = spark.createDataFrame(
+        [(s,) for i, s in enumerate(seqs) for _ in range(i % 3 + 1)], "seq string"
     )
-    pn = key(rank_paths(noisy, k).collect())
-    sn = key(rank_paths(noisy, k, packed=False).collect())
-    assert pn == sn and {x for x, _, _ in pn} == set(frags)
+    key = lambda df: {tuple(r) for r in df.collect()}
+    got = {}
+    for codec in (StringCodec(k), codec_for_k(k)):
+        counts = codec.count(reads, min_coverage=1, max_coverage=None)
+        pruned = prune_forks(
+            expand_orientations(counts, k, input_canonical=True), k,
+            min_error_coverage=2,
+        ).localCheckpoint()
+        got[type(codec)] = (
+            key(pruned.select(codec.decode(codec.col), "count")),
+            key(rank_paths(pruned, k)),
+            key(rank_paths(pruned, k, overlap=k - 3)) if shape == "linear" else None,
+            key(
+                assemble_from_counts(
+                    counts, k, min_contig=k + 1, min_error_coverage=2,
+                    algorithm="rank", input_canonical=True,
+                )
+            ),
+        )
+    s, p = got.values()
+    assert s == p
+    # anchored paths only: the cycle (and any pruned branch) is dropped
+    paths = {seq for seq, _, _ in s[1]}
+    assert set(linear) | {revcomp(f) for f in linear} <= paths
+    if shape != "palindrome":
+        assert {seq for _, seq, _, _ in s[3]} == {
+            min(f, revcomp(f)) for f in linear
+        }
 
 
 def test_packed_revcomp_and_canonical_match_string_kernels(spark):
@@ -186,42 +222,38 @@ def test_fully_packed_pipeline_matches_string_rank(spark):
     same contigs as the string pipeline (anchored-path semantics)."""
     from reflexiv_spark.operators.counter import count_kmers
     from reflexiv_spark.operators.counter_packed import count_kmers_packed
-    from reflexiv_spark.pipelines.assemble import (
-        assemble_from_counts,
-        assemble_from_packed_counts,
-    )
+    from reflexiv_spark.pipelines.assemble import assemble_from_counts
 
     g = random_genome(1200, seed=51)
     reads = simulate_reads(g, read_len=90, coverage=14, seed=52)
     df = spark.createDataFrame([(r,) for r in reads], ["seq"])
     k = 21
+    kw = dict(min_contig=100, min_error_coverage=8, algorithm="rank")
     s = {
         (r["seq"], r["left_cover"], r["right_cover"])
         for r in assemble_from_counts(
-            count_kmers(df, k, min_coverage=2),
-            k, min_contig=100, min_error_coverage=8, algorithm="rank",
+            count_kmers(df, k, min_coverage=2), k, **kw
         ).collect()
     }
     p = {
         (r["seq"], r["left_cover"], r["right_cover"])
-        for r in assemble_from_packed_counts(
-            count_kmers_packed(df, k, min_coverage=2, decode=False),
-            k, min_contig=100, min_error_coverage=8,
+        for r in assemble_from_counts(
+            count_kmers_packed(df, k, min_coverage=2, decode=False), k, **kw
         ).collect()
     }
     assert p == s and p
 
 
 def test_assemble_packed_rank_end_to_end(spark):
-    """assemble(packed=True, algorithm='rank') — the string-free front
-    door — recovers the genome like the default path."""
+    """assemble(algorithm='rank') — the string-free front door —
+    recovers the genome like the default path."""
     from reflexiv_spark.pipelines.assemble import assemble
 
     g = random_genome(1500, seed=71)
     reads = simulate_reads(g, read_len=100, coverage=15, seed=72)
     df = spark.createDataFrame([(r,) for r in reads], ["seq"])
     contigs = assemble(
-        df, k=21, min_coverage=2, min_contig=400, packed=True, algorithm="rank"
+        df, k=21, min_coverage=2, min_contig=400, algorithm="rank"
     ).collect()
     assert contigs
     longest = max((r["seq"] for r in contigs), key=len)
@@ -248,36 +280,25 @@ def test_assemble_from_counts_rank_matches_contract(spark):
     assert a == b and a  # linear genome: no cycles, identical contigs
 
 
-def test_rank_paths_blocks_hashed_ids_match_array_ids(spark):
-    """The r13 hashed loop-id proxy (xxhash64 pointer ids through the
-    doubling rounds, blocks re-attached at final assembly) must produce
-    byte-identical contigs to the array-id loop — and the injectivity
-    gate must fall back cleanly when disabled."""
-    from reflexiv_spark.operators import extension as ex
-    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
-    from reflexiv_spark.operators.extension import rank_paths_blocks
+@pytest.mark.parametrize("k", [21, 41])
+def test_rank_paths_loop_id_collision_reruns_on_native_ids(spark, monkeypatch, k):
+    """A hashed loop id that is not injective on the input (forced here:
+    every k-mer hashes to 0) must rerun the same loop on the native
+    string / block ids and give byte-identical contigs."""
+    from reflexiv_spark.operators.codec import StringCodec, codec_for_k
+    from reflexiv_spark.operators.extension import rank_paths
 
-    k = 41
     genome = random_genome(1200, seed=21)
     seqs = simulate_reads(genome, read_len=150, coverage=18.0, seed=7)
     reads = spark.createDataFrame([(s,) for s in seqs], "seq string")
-    counts = count_kmers_blocks(
-        reads, k, min_coverage=1, max_coverage=None, decode=False
+    codec = codec_for_k(k) if k > 31 else StringCodec(k)
+    counts = codec.count(reads, min_coverage=1, max_coverage=None)
+    hashed = sorted(tuple(r) for r in rank_paths(counts, k).collect())
+    monkeypatch.setattr(
+        type(codec), "loop_id", lambda self, c: F.lit(0).cast("long")
     )
-
-    orig = ex._HASHED_LOOP_IDS
-    try:
-        ex._HASHED_LOOP_IDS = True
-        hashed = sorted(
-            tuple(r) for r in rank_paths_blocks(counts, k).collect()
-        )
-        ex._HASHED_LOOP_IDS = False
-        arr = sorted(
-            tuple(r) for r in rank_paths_blocks(counts, k).collect()
-        )
-    finally:
-        ex._HASHED_LOOP_IDS = orig
-    assert hashed == arr and hashed
+    native = sorted(tuple(r) for r in rank_paths(counts, k).collect())
+    assert hashed == native and hashed
 
 
 def test_rank_paths_forked_input_fails_loudly(spark):
@@ -301,10 +322,9 @@ def test_rank_paths_forked_input_fails_loudly(spark):
     with pytest.raises(Exception, match="fork-free precondition violated"):
         rank_paths(df, k).collect()
 
-    # the packed kernel shares the guard
+    # the packed codec shares the guard
     from reflexiv_spark.operators.counter_packed import kmer_to_packed
-    from reflexiv_spark.operators.extension import rank_paths_packed
 
     packed = df.select(kmer_to_packed("kmer", k).alias("kid"), "count")
     with pytest.raises(Exception, match="fork-free precondition violated"):
-        rank_paths_packed(packed, k).collect()
+        rank_paths(packed, k).collect()

@@ -23,6 +23,23 @@ def test_meta_assembles_genome(spark):
     assert len(best.seq) >= 0.9 * len(genome)
 
 
+def test_meta_rank_ladder_codecs_agree(spark, monkeypatch):
+    """The rank ladder counts into the codec chosen from k (int64 ids at
+    k=23, long blocks at k=41); forcing the string codec on every rung
+    must give exactly the same contigs."""
+    import reflexiv_spark.pipelines.meta as meta
+    from reflexiv_spark.operators.codec import StringCodec
+
+    genome = random_genome(1000, seed=61)
+    seqs = simulate_reads(genome, read_len=150, coverage=15.0, seed=13)
+    reads = spark.createDataFrame([(s,) for s in seqs], "seq string")
+    kw = dict(klist=(23, 41), min_coverage=2, min_contig=100, algorithm="rank")
+    packed = {(r.contig_id, r.seq) for r in meta_assemble(reads, **kw).collect()}
+    monkeypatch.setattr(meta, "codec_for", lambda algorithm, k: StringCodec(k))
+    string = {(r.contig_id, r.seq) for r in meta_assemble(reads, **kw).collect()}
+    assert packed == string and packed
+
+
 def test_stage_resume(spark, tmp_path):
     workdir = str(tmp_path / "stages")
     calls = []

@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from tests.conftest import random_genome
+from tests.conftest import random_genome, simulate_reads
 
 from reflexiv_spark.sources.records import read_fasta, read_fastq
 
@@ -197,11 +197,14 @@ def test_python_datasource_matches_mapinpandas_reader(spark, tmp_path):
     fa_mp = sorted(map(tuple, read_fasta(spark, str(fa)).collect()))
     assert fa_ds == fa_mp and len(fa_ds) == 2
 
-    # gzip example from the reference keeps working through the API
-    via_gz = (
-        spark.read.format("fastq")
-        .load("/root/reference/example/paired_dat1.fq.gz")
-        .count()
+    # a gzipped FASTQ keeps working through the API
+    reads = simulate_reads(random_genome(600, seed=5), read_len=80, coverage=4)
+    gz = tmp_path / "paired_dat1.fq.gz"
+    with gzip.open(gz, "wt") as f:
+        for i, seq in enumerate(reads):
+            f.write(f"@r{i}\n{seq}\n+\n{'I' * len(seq)}\n")
+    via_gz = sorted(
+        map(tuple, spark.read.format("fastq").load(str(gz)).collect())
     )
-    gz_mp = read_fastq(spark, "/root/reference/example/paired_dat1.fq.gz").count()
-    assert via_gz == gz_mp > 0
+    gz_mp = sorted(map(tuple, read_fastq(spark, str(gz)).collect()))
+    assert via_gz == gz_mp and len(via_gz) == len(reads)

@@ -34,15 +34,19 @@ def _capture_loop_state(monkeypatch, run):
 
 
 def _counts(spark, k, seed=17):
+    """Counts in the codec chosen from k (int64 ids up to 31, blocks above)."""
+    from reflexiv_spark.operators.codec import codec_for_k
+
     genome = random_genome(800, seed=seed)
     seqs = simulate_reads(genome, read_len=120, coverage=15.0, seed=seed)
     reads = spark.createDataFrame([(s,) for s in seqs], "seq string")
-    from reflexiv_spark.functions.kmer import explode_kmers
+    return codec_for_k(k).count(reads, min_coverage=1, max_coverage=None)
 
-    return (
-        explode_kmers(reads, k)
-        .groupBy("kmer")
-        .agg(F.count(F.lit(1)).cast("int").alias("count"))
+
+def _constant_loop_id(monkeypatch, codec_cls):
+    """Every hashed loop id collides, so rank_paths must fall back."""
+    monkeypatch.setattr(
+        codec_cls, "loop_id", lambda self, c: F.lit(0).cast("long")
     )
 
 
@@ -82,15 +86,14 @@ def test_blocks_rank_loop_state_is_three_longs_hashed(spark, monkeypatch):
 
 
 def test_blocks_rank_loop_array_fallback_is_long_blocks(spark, monkeypatch):
-    """With the hashed-id proxy pinned off (the injectivity-collision
-    fallback), the k>31 loop state must be long-block arrays — never
-    ASCII k-mers."""
-    import reflexiv_spark.operators.extension as ext
+    """After a loop-id collision (forced: a constant hash), the k>31 loop
+    state must be long-block arrays — never ASCII k-mers."""
+    from reflexiv_spark.operators.codec import BlocksCodec
     from reflexiv_spark.operators.extension import rank_paths
 
     k = 41
     counts = _counts(spark, k, seed=23)
-    monkeypatch.setattr(ext, "_HASHED_LOOP_IDS", False)
+    _constant_loop_id(monkeypatch, BlocksCodec)
     schema = _capture_loop_state(
         monkeypatch, lambda: rank_paths(counts, k).count()
     )
@@ -106,13 +109,22 @@ def test_blocks_rank_loop_array_fallback_is_long_blocks(spark, monkeypatch):
 
 
 def test_string_fallback_still_available(spark, monkeypatch):
-    """Non-ACGT input must keep falling back to the string loop (the
-    packed representations are injective only on fixed-length ACGT)."""
+    """Non-ACGT input stays on the string codec (the packed codecs are
+    injective only on fixed-length ACGT): its loop rides hashed long ids,
+    falls back to the string ids themselves after a collision, and
+    decodes the original characters either way."""
+    from reflexiv_spark.operators.codec import StringCodec
     from reflexiv_spark.operators.extension import rank_paths
 
     counts = spark.createDataFrame(
         [("ANCDE", 1), ("NCDEF", 1)], "kmer string, count int"
     )
+    run = lambda: [r.seq for r in rank_paths(counts, 5).collect()]
+    assert run() == ["ANCDEF"]
+    hashed = _capture_loop_state(monkeypatch, lambda: rank_paths(counts, 5).count())
+    assert isinstance(hashed.fields[0].dataType, LongType)
+    _constant_loop_id(monkeypatch, StringCodec)
+    assert run() == ["ANCDEF"]
     schema = _capture_loop_state(
         monkeypatch, lambda: rank_paths(counts, 5).count()
     )

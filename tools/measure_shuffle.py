@@ -1,14 +1,13 @@
 #!/usr/bin/env python
 """Measure wall clock + total shuffle read/write bytes of the
-count→expand→prune→rank assembly pipeline in three representations:
-``string`` (ASCII k-mers everywhere), ``loop_packed`` (strings up to the
-loop, rank_paths auto-packs internally), and ``fully_packed``
-(2-bit int64 ids from the counter onward, one decode at assembly).
-Sums per-stage shuffle metrics from the live Spark UI REST API between
-two marks, so only the measured section counts; best-of-2 alternating
-runs for JIT fairness.
+count→expand→prune→rank assembly pipeline in two codecs: ``string``
+(ASCII k-mers everywhere) and ``packed`` (the codec chosen from k —
+2-bit int64 ids for k ≤ 31, long-block ``array<long>`` ids above — from
+the counter onward, one decode at assembly). Sums per-stage shuffle
+metrics from the live Spark UI REST API between two marks, so only the
+measured section counts; best-of-2 alternating runs for JIT fairness.
 
-Usage: python tools/measure_shuffle.py [sf_dir]
+Usage: python tools/measure_shuffle.py [sf_dir] [k]
 """
 
 from __future__ import annotations
@@ -22,6 +21,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+K = int(sys.argv[2]) if len(sys.argv) > 2 else 15
 
 
 def _stages(ui: str):
@@ -43,18 +43,12 @@ def _totals(ui: str):
     return w, r, ids
 
 
-def main():
-    from pyspark.sql import SparkSession, functions as F
+def main(k: int = K):
+    from pyspark.sql import SparkSession
 
-    from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_packed import count_kmers_packed
-    from reflexiv_spark.operators.extension import rank_paths, rank_paths_packed
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations,
-        expand_orientations_packed,
-        prune_forks,
-        prune_forks_packed,
-    )
+    from reflexiv_spark.operators.codec import StringCodec, codec_for_k
+    from reflexiv_spark.operators.extension import rank_paths
+    from reflexiv_spark.pipelines.assemble import expand_orientations, prune_forks
     from __spark_entry__ import _dna
 
     spark = (
@@ -66,43 +60,22 @@ def main():
         .getOrCreate()
     )
     ui = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}"
-    k = 15
     dna = _dna(spark, SF_DIR).localCheckpoint(eager=True)
     n = dna.count()
 
-    def string_pipeline():
-        counts = count_kmers(dna, k, min_coverage=2)
-        pruned = prune_forks(expand_orientations(counts), k)
-        return rank_paths(pruned.select("kmer", "count"), k, packed=False)
+    def pipeline(codec):
+        counts = codec.count(dna, min_coverage=2)
+        pruned = prune_forks(expand_orientations(counts, k), k)
+        return rank_paths(pruned.select(codec.col, "count"), k)
 
-    def loop_packed():
-        # strings up to the loop; rank_paths auto-packs internally
-        counts = count_kmers(dna, k, min_coverage=2)
-        pruned = prune_forks(expand_orientations(counts), k)
-        return rank_paths(pruned.select("kmer", "count"), k, packed=True)
-
-    def fully_packed():
-        counts = count_kmers_packed(dna, k, min_coverage=2, decode=False)
-        pruned = prune_forks_packed(
-            expand_orientations_packed(
-                counts.withColumnRenamed("packed", "kid"), k
-            ),
-            k,
-        )
-        return rank_paths_packed(pruned.select("kid", "count"), k)
-
-    variants = {
-        "string": string_pipeline,
-        "loop_packed": loop_packed,
-        "fully_packed": fully_packed,
-    }
+    variants = {"string": StringCodec(k), "packed": codec_for_k(k)}
     out = {}
     # alternate order, keep the best-of-2 wall clock (JIT/warmup fairness)
     order = list(variants) + list(reversed(list(variants)))
     for label in order:
         w0, r0, _ = _totals(ui)
         t0 = time.time()
-        rows = variants[label]().count()
+        rows = pipeline(variants[label]).count()
         dt = time.time() - t0
         time.sleep(2)  # let the UI ingest the final stage metrics
         w1, r1, _ = _totals(ui)
@@ -114,10 +87,11 @@ def main():
         }
         if label not in out or cur["sec"] < out[label]["sec"]:
             out[label] = cur
+    out["k"] = k
     out["input_rows"] = n
-    out["write_ratio_full"] = round(
+    out["write_ratio"] = round(
         out["string"]["shuffle_write_mb"]
-        / max(out["fully_packed"]["shuffle_write_mb"], 0.01),
+        / max(out["packed"]["shuffle_write_mb"], 0.01),
         2,
     )
     print(json.dumps(out))

@@ -1,97 +1,20 @@
 #!/usr/bin/env python
-"""Measure wall clock + shuffle bytes of the k=41 assembly pipeline in
-two representations: ``string`` (ASCII 41-mers everywhere) vs
-``blocks`` (long-block 2-bit array<long> ids from the counter through
-the contraction loop — operators/counter_blocks.py). The k>31 sibling
-of tools/measure_shuffle.py; same UI-REST delta protocol, best-of-2
-alternating runs.
+"""tools/measure_shuffle.py at k=41 by default, where the packed codec
+is long-block ``array<long>`` ids (operators/counter_blocks.py): wall
+clock + shuffle bytes of the string vs packed assembly pipeline, same
+UI-REST delta protocol, best-of-2 alternating runs.
 
 Usage: python tools/measure_shuffle_blocks.py [sf_dir] [k]
 """
 
 from __future__ import annotations
 
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.measure_shuffle import _totals  # noqa: E402
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-K = int(sys.argv[2]) if len(sys.argv) > 2 else 41
-
-
-def main():
-    from pyspark.sql import SparkSession
-
-    from __spark_entry__ import _dna
-    from reflexiv_spark.operators.counter import count_kmers
-    from reflexiv_spark.operators.counter_blocks import count_kmers_blocks
-    from reflexiv_spark.operators.extension import (
-        rank_paths,
-        rank_paths_blocks,
-    )
-    from reflexiv_spark.pipelines.assemble import (
-        expand_orientations,
-        expand_orientations_blocks,
-        prune_forks,
-        prune_forks_blocks,
-    )
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "5000")
-        .getOrCreate()
-    )
-    ui = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}"
-    dna = _dna(spark, SF_DIR).localCheckpoint(eager=True)
-    n = dna.count()
-
-    def string_pipeline():
-        counts = count_kmers(dna, K, min_coverage=2)
-        pruned = prune_forks(expand_orientations(counts), K)
-        return rank_paths(pruned.select("kmer", "count"), K, packed=False)
-
-    def blocks_pipeline():
-        counts = count_kmers_blocks(dna, K, min_coverage=2, decode=False)
-        pruned = prune_forks_blocks(
-            expand_orientations_blocks(counts, K), K
-        )
-        return rank_paths_blocks(pruned.select("kid", "count"), K)
-
-    variants = {"string": string_pipeline, "blocks": blocks_pipeline}
-    out = {}
-    order = list(variants) + list(reversed(list(variants)))
-    for label in order:
-        w0, r0, _ = _totals(ui)
-        t0 = time.time()
-        rows = variants[label]().count()
-        dt = time.time() - t0
-        time.sleep(2)
-        w1, r1, _ = _totals(ui)
-        cur = {
-            "rows": rows,
-            "sec": round(dt, 2),
-            "shuffle_write_mb": round((w1 - w0) / 1e6, 2),
-            "shuffle_read_mb": round((r1 - r0) / 1e6, 2),
-        }
-        if label not in out or cur["sec"] < out[label]["sec"]:
-            out[label] = cur
-    out["k"] = K
-    out["input_rows"] = n
-    out["write_ratio"] = round(
-        out["string"]["shuffle_write_mb"]
-        / max(out["blocks"]["shuffle_write_mb"], 0.01),
-        2,
-    )
-    print(json.dumps(out))
-
+from tools.measure_shuffle import main  # noqa: E402
 
 if __name__ == "__main__":
-    main()
+    main(int(sys.argv[2]) if len(sys.argv) > 2 else 41)
